@@ -17,10 +17,9 @@ import time
 from pathlib import Path
 
 from perfbench import probes
-from perfbench.trace import Tracer
+from perfbench.trace import Tracer, span_cost_s
 from perfbench.workloads import WORKLOADS, PassResult
 
-SETUP_ROUNDS = 3
 WARMUP_PASSES = 2  # the first pass after a cold JVM start runs 2-3x slower,
                    # the second still ~10% slower on raster_halo
 TAIL_BEYOND = 10
@@ -45,7 +44,7 @@ ROLES = {
 
 
 class Session:
-    """Owns the SparkSession; every (re)start gets a fresh temp dir, so
+    """Owns the SparkSession; its start gets a fresh temp dir, so
     ``session.ship_package`` builds its zip from this checkout."""
 
     def __init__(self, run_dir: Path, cores: int):
@@ -66,11 +65,6 @@ class Session:
             "perfbench", master=f"local[{self.cores}]",
             extra_conf={"spark.sql.warehouse.dir": str(self.run_dir / "warehouse")})
         return time.perf_counter() - t0
-
-    def restart(self) -> float:
-        t0 = time.perf_counter()
-        self.spark.stop()
-        return time.perf_counter() - t0 + self.start()
 
     def zip_digest(self) -> str:
         z = Path(tempfile.gettempdir()) / "xarray_spatial_spark_pyfiles.zip"
@@ -142,6 +136,7 @@ def _loop(sess: Session, wl, tree, seconds: float, ref: str, tracer: Tracer,
         if not errors:
             last = res
         rec["items"] = wl.items
+        rec["heap_used_mb"] = probes.heap_used_mb(sess.spark)
         rec["errors"] = errors[:5]
         rec.update({k: v for k, v in res.info.items() if k != "error"})
         out.append(rec)
@@ -160,20 +155,18 @@ _off = Tracer(False)
 
 
 def setup(sess: Session, wl, tracer: Tracer) -> tuple[dict, str]:
-    """Cold start, input load, SETUP_ROUNDS session rebuilds, plan
-    building, then WARMUP_PASSES warm-up passes that fix the reference
-    digest; the last is checked against the oracle.
+    """Cold start, input load, plan building, then WARMUP_PASSES
+    warm-up passes that fix the reference digest; the last is checked
+    against the oracle.
 
-    setup_s = cold start + median rebuild + plan build + warm-up passes:
-    what a user pays from launching the session to a first finished
-    job, with the session build (SparkContext + package zip from a
-    fresh temp dir) taken as the median of SETUP_ROUNDS rebuilds."""
+    setup_s = cold start + plan build + warm-up passes: what a user pays
+    from launching the session to a first finished job on a warm JVM.
+    The input load is not in it (one-time generation, reported apart)."""
     cold = sess.start()
     zip_digest = sess.zip_digest()
     t0 = time.perf_counter()
     wl.prepare(sess.spark)
     prepare_s = time.perf_counter() - t0
-    rebuilds = [sess.restart() for _ in range(SETUP_ROUNDS)]
     t0 = time.perf_counter()
     with tracer.span("plan"):
         wl.bind(sess.spark, tracer)
@@ -188,9 +181,8 @@ def setup(sess: Session, wl, tracer: Tracer) -> tuple[dict, str]:
     if len(set(digests)) != 1:
         warm_errors.append(f"warm-up digests differ: {digests}")
     info = {
-        "setup_s": cold + statistics.median(rebuilds) + plan + sum(warm),
+        "setup_s": cold + plan + sum(warm),
         "session.start_s": cold,
-        "session.rebuild_s": rebuilds,
         "plan.build_s": plan,
         "warmup_passes_s": warm,
         "input.prepare_s": prepare_s,
@@ -232,19 +224,22 @@ def run(workload: str, seed: int, seconds: float, traced: bool, run_dir: Path,
     try:
         info, ref = setup(sess, wl, tracer)
         tree = probes.ProcessTree(sess.jvm_pid())
+        rss = probes.RssSampler(tree)
         tree.sample()
         if traced:
-            result = _traced(sess, wl, tree, seconds, ref, info, tracer)
+            result = _traced(sess, wl, tree, rss, seconds, ref, info, tracer)
         else:
-            passes, last = _loop(sess, wl, tree, seconds, ref, _off, "pass")
+            with rss:
+                passes, last = _loop(sess, wl, tree, seconds, ref, _off, "pass")
             result = {"passes": passes}
             final_errors = _oracle(sess, wl, last) if last else []
             if final_errors:  # the last good pass failed the oracle
                 next(p for p in reversed(passes) if not p["errors"])["errors"] = final_errors[:5]
             result.update(summarize(passes))
-        tree.sample()
-        result["peak_rss_mb"] = tree.peak_rss_mb()
-        result["python_workers"] = tree.worker_count()
+        result["peak_rss_mb"] = rss.peak_mb
+        result["rss_samples"] = rss.samples
+        result["python_workers"] = len(rss.pids) - 1
+        result["heap_used_mb_max"] = max(p["heap_used_mb"] for p in result["passes"])
     finally:
         sess.stop()
     result.update(info)
@@ -256,19 +251,31 @@ def run(workload: str, seed: int, seconds: float, traced: bool, run_dir: Path,
     return result
 
 
-def _traced(sess: Session, wl, tree, seconds: float, ref: str, info: dict,
+def _traced(sess: Session, wl, tree, rss, seconds: float, ref: str, info: dict,
             tracer: Tracer) -> dict:
-    """Untraced then traced halves of the loop (their throughput
-    difference is the tracing overhead), the workload's layer times
-    and counts, and Spark stage metrics of the traced passes."""
+    """Untraced then traced halves of the loop, the workload's layer
+    times and counts, and Spark stage metrics of the traced passes.
+
+    ``trace.overhead`` is the spans a traced pass records times the
+    measured cost of one span, over the traced pass time.  The
+    throughput difference of the two halves is reported beside it; at a
+    few passes per half it is within pass-to-pass noise.
+
+    Passes the workload runs while tracing other workloads
+    (``wl.probe_checks``) count in ``attempted``, and in ``failed``
+    when their output check found errors."""
     spark = sess.spark
-    plain, _ = _loop(sess, wl, tree, seconds / 2, ref, _off, "pass")
-    traced, _ = _loop(sess, wl, tree, seconds / 2, ref, tracer, "traced")
+    with rss:
+        plain, _ = _loop(sess, wl, tree, seconds / 2, ref, _off, "pass")
+        n_spans = len(tracer.spans)
+        traced, _ = _loop(sess, wl, tree, seconds / 2, ref, tracer, "traced")
+        n_spans = len(tracer.spans) - n_spans
     s_plain, s_traced = summarize(plain), summarize(traced)
     traced_wall = sum(p["wall_s"] for p in traced)
     stage = probes.stage_metrics(spark, "traced", sess.cores, traced_wall)
     n = len(traced)
     layers, counts = wl.trace_layers(spark, tracer, traced, stage)
+    span_cost = span_cost_s()
 
     roles = {f"layer.{role}_s": sum(layers[name] for name in names)
              for role, names in ROLES[wl.name].items()}
@@ -285,15 +292,22 @@ def _traced(sess: Session, wl, tree, seconds: float, ref: str, info: dict,
         "spark.jvm_cpu_s": statistics.median(p["jvm_cpu_s"] for p in traced),
         # detail only: exactly 0 where no Python worker runs (geo_join)
         "spark.python_cpu_s": statistics.median(p["python_cpu_s"] for p in traced),
-        "trace.overhead": 1.0 - s_traced["items_per_s"] / s_plain["items_per_s"],
+        "trace.overhead": n_spans / n * span_cost / s_traced["pass_s_p50"],
     }
     named = {f"{k}_s": v for k, v in layers.items()}
     named.update(counts)
+    summary = summarize(plain + traced)
+    summary["attempted"] += len(wl.probe_checks)
+    summary["failed"] += sum(1 for _, errors in wl.probe_checks if errors)
     return {
         "passes": plain + traced,
-        **summarize(plain + traced),
+        **summary,
+        "probe_errors": {name: errors[:5] for name, errors in wl.probe_checks},
         "untraced_items_per_s": s_plain["items_per_s"],
         "traced_items_per_s": s_traced["items_per_s"],
+        "trace.overhead_measured": 1.0 - s_traced["items_per_s"] / s_plain["items_per_s"],
+        "trace.spans_per_pass": n_spans / n,
+        "trace.span_cost_s": span_cost,
         "per_layer": per_layer,
         "layers": named,
         "span_self_s": tracer.self_times(),

@@ -1,10 +1,11 @@
 """Host and Spark probes: CPU and resident memory of the JVM and its
-Python workers read from ``/proc``, and per-stage task metrics read
-from the driver's live status store."""
+Python workers read from ``/proc``, the JVM's heap in use, and
+per-stage task metrics read from the driver's live status store."""
 
 from __future__ import annotations
 
 import os
+import threading
 from pathlib import Path
 
 _TICK = os.sysconf("SC_CLK_TCK")
@@ -34,10 +35,10 @@ def _descendants(root: int) -> list[int]:
     return out
 
 
-def _hwm_kb(pid: int) -> int:
+def _rss_kb(pid: int) -> int:
     try:
         for line in Path(f"/proc/{pid}/status").read_text().splitlines():
-            if line.startswith("VmHWM:"):
+            if line.startswith("VmRSS:"):
                 return int(line.split()[1])
     except (FileNotFoundError, ProcessLookupError, PermissionError):
         pass
@@ -49,13 +50,10 @@ class ProcessTree:
     daemon and its Python workers.
 
     CPU of a process that has exited is still counted: a worker reaped
-    by the daemon lands in the daemon's ``cutime``/``cstime``.  Peak
-    memory is the sum over processes of each one's ``VmHWM``, kept per
-    pid so a worker that exits still counts."""
+    by the daemon lands in the daemon's ``cutime``/``cstime``."""
 
     def __init__(self, root: int):
         self.root = root
-        self._hwm: dict[int, int] = {}
 
     def sample(self) -> dict[str, float]:
         jvm = py = 0.0
@@ -72,14 +70,56 @@ class ProcessTree:
                 py += ticks - own
             else:
                 py += ticks
-            self._hwm[pid] = max(self._hwm.get(pid, 0), _hwm_kb(pid))
         return {"jvm_cpu_s": jvm / _TICK, "python_cpu_s": py / _TICK}
 
-    def peak_rss_mb(self) -> float:
-        return sum(self._hwm.values()) / 1024.0
+    def rss_kb(self) -> tuple[int, list[int]]:
+        """Summed ``VmRSS`` of the tree now, and the pids summed."""
+        pids = _descendants(self.root)
+        return sum(_rss_kb(pid) for pid in pids), pids
 
-    def worker_count(self) -> int:
-        return len(self._hwm) - 1
+
+class RssSampler:
+    """While active (``with sampler:``), samples the tree's summed RSS
+    every ``interval`` seconds on a background thread.  ``peak_mb`` is
+    the largest sum seen at one instant, over every active period, so
+    it covers the measured passes and nothing before them."""
+
+    def __init__(self, tree: ProcessTree, interval: float = 0.25):
+        self.tree = tree
+        self.interval = interval
+        self.peak_mb = 0.0
+        self.samples = 0
+        self.pids: set[int] = set()
+        self._stop = threading.Event()
+        self._thread: threading.Thread | None = None
+
+    def _sample(self) -> None:
+        kb, pids = self.tree.rss_kb()
+        self.peak_mb = max(self.peak_mb, kb / 1024.0)
+        self.samples += 1
+        self.pids.update(pids)
+
+    def _run(self) -> None:
+        while not self._stop.wait(self.interval):
+            self._sample()
+
+    def __enter__(self):
+        self._sample()
+        self._stop.clear()
+        self._thread = threading.Thread(target=self._run, daemon=True)
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc):
+        self._stop.set()
+        self._thread.join()
+        self._sample()
+
+
+def heap_used_mb(spark) -> float:
+    """The driver JVM's heap in use now (MemoryMXBean), in MB."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    return mx.getHeapMemoryUsage().getUsed() / 2**20
 
 
 def loadavg() -> float:

@@ -123,7 +123,8 @@ class _FakeWorkload:
         return []
 
 
-def test_digest_mismatch_counts_as_failed_pass():
+def test_digest_mismatch_counts_as_failed_pass(monkeypatch):
+    monkeypatch.setattr(harness.probes, "heap_used_mb", lambda spark: 1.0)
     sc = SimpleNamespace(setJobGroup=lambda *a: None)
     sess = SimpleNamespace(spark=SimpleNamespace(sparkContext=sc))
     tree = SimpleNamespace(sample=lambda: {"jvm_cpu_s": 0.0, "python_cpu_s": 0.0})
@@ -199,7 +200,46 @@ def test_smoke_traced_run_reports_every_layer_metric():
                  "manifest.write_s", "manifest.lineage_s", "manifest.resume_s",
                  "manifest.files_written"):
         assert name in layers, name
-    assert -1.0 < detail["per_layer"]["trace.overhead"] < 1.0
+    assert 0.0 < detail["per_layer"]["trace.overhead"] < 0.05
+    assert detail["probe_errors"] == {"zone_join": [], "tile_ingest": []}
+
+
+# Each script corrupts one traced probe's output before running the
+# command line in-process: geo_join's traced run must then fail.
+_CORRUPT = {
+    "zone_join": """
+orig = workloads.ZoneJoin.prepare
+def prepare(self, spark):
+    from pyspark.sql import functions as F
+    orig(self, spark)
+    name, fn = self.layers[0]
+    self.layers[0] = (name, lambda df: fn(df).withColumn("zone", F.col("zone") + 1))
+workloads.ZoneJoin.prepare = prepare
+""",
+    "tile_ingest": """
+orig = workloads.TileIngest.extract_assign
+def extract_assign(self, spark):
+    from pyspark.sql import functions as F
+    return orig(self, spark).withColumn("body", F.concat("body", F.lit("!")))
+workloads.TileIngest.extract_assign = extract_assign
+""",
+}
+
+
+@pytest.mark.parametrize("probe", sorted(_CORRUPT))
+def test_corrupted_probe_fails_the_traced_run(probe):
+    argv = ["--workload", "geo_join", "--seed", "7", "--seconds", "1", "--trace", "1",
+            "--size", str(TINY["geo_join"])]
+    script = (f"import sys\nsys.path.insert(0, {str(ROOT)!r})\n"
+              "from perfbench import run, workloads\n" + _CORRUPT[probe]
+              + f"sys.exit(run.main({argv!r}))\n")
+    p = subprocess.run([sys.executable, "-c", script], cwd=ROOT, capture_output=True,
+                       text=True, timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    lines = p.stdout.strip().splitlines()
+    result, detail = json.loads(lines[-1]), json.loads(lines[-2])
+    assert result["correct"] is False and result["failed"] >= 1
+    assert detail["probe_errors"][probe]
 
 
 def test_fails_without_the_engine(tmp_path):

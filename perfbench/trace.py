@@ -60,3 +60,13 @@ class Tracer:
         t0 = self.spans[0]["start"] if self.spans else 0.0
         spans = [dict(s, start=s["start"] - t0, end=s["end"] - t0) for s in self.spans]
         path.write_text(json.dumps({"spans": spans, **extra}, indent=1))
+
+
+def span_cost_s(n: int = 20_000) -> float:
+    """Measured cost of recording one span, on a scratch tracer."""
+    scratch = Tracer(True)
+    t0 = time.perf_counter()
+    for _ in range(n):
+        with scratch.span("cost"):
+            pass
+    return (time.perf_counter() - t0) / n

@@ -11,7 +11,7 @@ functions and exposes the same small interface to the harness:
 - ``trace_layers(spark, tracer, passes, stage)``: layer times and
   counts for the traced run, mostly from ``prefixes()``: (layer,
   builder, base layer) triples where ``builder`` returns the pipeline
-  cut after that layer, run once to a noop sink.
+  cut after that layer, run to a noop sink (see ``prefix_layers``).
 
 A pass's result carries a digest that must be identical on every pass.
 The reference pass (the last warm-up) and the last measured pass are
@@ -39,6 +39,7 @@ _OFF = Tracer(False)
 EDGE_TOL_DEG = 1e-9   # a point this close to an edge may fall either way
 DIST_ATOL_M = 1e-3
 INGEST_PROBE_DOCS = 25_000  # tile_ingest size when traced on geo_join
+PREFIX_REPS = 3  # timed executions of each prefix, after one warm-up
 
 
 @dataclass
@@ -56,23 +57,39 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def prefix_layers(spark, prefixes, tracer) -> tuple[dict, dict]:
-    """Execute each prefix once; a layer's time is its prefix's
-    execution time minus its base prefix's (Spark is lazy, so only
-    differences of executed prefixes separate the layers of one job).
-    ``build(spark, built)`` may extend an earlier prefix's DataFrame from
-    ``built``.  Plan building is not in these times; its spans are."""
-    took, layers, built = {}, {}, {}
+def prefix_layers(spark, prefixes, tracer, measured=None) -> tuple[dict, dict, list]:
+    """Execute each prefix once to warm it (the first execution compiles
+    its generated code), then PREFIX_REPS more times.  A prefix's time
+    is the median of those; a layer's time is its prefix's time minus
+    its base prefix's (Spark is lazy, so only differences of executed
+    prefixes separate the layers of one job).  ``build(spark, built)``
+    may extend an earlier prefix's DataFrame from ``built``.  Plan
+    building is not in these times; its spans are.  A prefix named in
+    ``measured`` (name -> times) is the measured pass itself: its times
+    are taken from there instead of running it again.
+
+    Also returns the layers the timing does not resolve: those whose
+    difference is smaller than the range of the two prefixes' repeats."""
+    took, spread, layers, built, unresolved = {}, {}, {}, {}, []
+    measured = measured or {}
     for name, build, base in prefixes:
         group = f"prefix:{name}"
         spark.sparkContext.setJobGroup(group, group)
         with tracer.span(group):
             df = built[name] = build(spark, built)
-            t0 = time.perf_counter()
-            _noop(df)
-            took[name] = time.perf_counter() - t0
+            times = measured.get(name)
+            if times is None:
+                _noop(df)
+                times = []
+                for _ in range(PREFIX_REPS):
+                    t0 = time.perf_counter()
+                    _noop(df)
+                    times.append(time.perf_counter() - t0)
+        took[name], spread[name] = median(times), max(times) - min(times)
         layers[name] = took[name] - (took[base] if base else 0.0)
-    return layers, took
+        if abs(layers[name]) < spread[name] + (spread[base] if base else 0.0):
+            unresolved.append(name)
+    return layers, took, unresolved
 
 
 def _check_zones(px, py, got, polygons) -> list[str]:
@@ -118,6 +135,9 @@ class Workload:
         self.run_dir = run_dir
         self.meta: dict = {}
         self.strategies: dict = {}
+        # (workload, errors) of other workloads' passes checked while
+        # tracing this one; the harness counts them as attempted passes
+        self.probe_checks: list[tuple[str, list[str]]] = []
 
     def bind(self, spark, tracer) -> None:
         """Per-session plan building; nothing by default."""
@@ -222,9 +242,14 @@ class _DocJoin(Workload):
         return out
 
     def trace_layers(self, spark, tracer, passes, stage) -> tuple[dict, dict]:
-        layers, _ = prefix_layers(spark, self.prefixes(), tracer)
+        """The last prefix (joins + aggregate) is the pass: its time is
+        the median of the traced passes."""
+        layers, _, unresolved = prefix_layers(
+            spark, self.prefixes(), tracer,
+            measured={self.layers[-1][0]: [p["wall_s"] for p in passes]})
         # every stored column is read, so the scan reads every stored byte
-        counts = {"sources.scan_bytes_per_doc": self.stored_bytes_per_item()}
+        counts = {"sources.scan_bytes_per_doc": self.stored_bytes_per_item(),
+                  "unresolved_layers": unresolved}
         if stage is not None:
             counts["zonal.shuffle_write_bytes"] = stage["shuffle_write_bytes"] / len(passes)
         return layers, counts
@@ -258,28 +283,42 @@ class GeoJoin(_DocJoin):
     def trace_layers(self, spark, tracer, passes, stage) -> tuple[dict, dict]:
         """Also traces the doc-side workloads the benchmark does not
         time (zone_join's Arrow path, tile_ingest's write side): one
-        warm-up and one traced pass each, their output checked, their
-        layers merged in (prefixed by the workload where a name
-        repeats)."""
+        warm-up and one traced pass each, their output checked (the
+        errors go to ``probe_checks``), their layers merged in
+        (prefixed by the workload where a name repeats)."""
         layers, counts = super().trace_layers(spark, tracer, passes, stage)
         for cls, size in ((ZoneJoin, self.size), (TileIngest, INGEST_PROBE_DOCS)):
             probe = cls(self.seed, size, self.run_dir)
-            with tracer.span(f"probe:{probe.name}"):
-                probe.prepare(spark)
-                probe.bind(spark, tracer)
-                probe.run_pass(spark, _OFF)  # warm-up
-                t0 = time.perf_counter()
-                res = probe.run_pass(spark, tracer)
-                counts[f"{probe.name}.pass_s"] = time.perf_counter() - t0
-            counts[f"{probe.name}.check_errors"] = len(
-                probe.check_pass(spark, res) + probe.check_oracle(spark, res))
-            counts[f"{probe.name}.items_per_pass"] = probe.items
-            counts[f"{probe.name}.stored_bytes_per_doc"] = probe.stored_bytes_per_item()
-            p_layers, p_counts = probe.trace_layers(spark, tracer, [res.info], stage=None)
+            try:
+                p_layers, p_counts = self._probe(spark, tracer, probe)
+            except Exception as e:  # a failed probe pass is counted, not fatal
+                self.probe_checks.append(
+                    (probe.name, [f"{type(e).__name__}: {e}"[:500]]))
+                continue
             for src, dst in ((p_layers, layers), (p_counts, counts)):
                 for k, v in src.items():
                     dst[f"{probe.name}.{k}" if k in dst else k] = v
         return layers, counts
+
+    def _probe(self, spark, tracer, probe) -> tuple[dict, dict]:
+        with tracer.span(f"probe:{probe.name}"):
+            probe.prepare(spark)
+            probe.bind(spark, tracer)
+            warm = probe.run_pass(spark, _OFF)
+            t0 = time.perf_counter()
+            res = probe.run_pass(spark, tracer)
+            pass_s = time.perf_counter() - t0
+        errors = [] if res.digest == warm.digest else [
+            f"digest {res.digest} != warm-up {warm.digest}"]
+        errors += probe.check_pass(spark, res) + probe.check_oracle(spark, res)
+        self.probe_checks.append((probe.name, errors))
+        p_layers, p_counts = probe.trace_layers(
+            spark, tracer, [dict(res.info, wall_s=pass_s)], stage=None)
+        p_counts.update({f"{probe.name}.{k}": v for k, v in (
+            ("pass_s", pass_s), ("check_errors", len(errors)),
+            ("items_per_pass", probe.items),
+            ("stored_bytes_per_doc", probe.stored_bytes_per_item()))})
+        return p_layers, p_counts
 
 
 class ZoneJoin(_DocJoin):
@@ -459,9 +498,10 @@ class RasterHalo(Workload):
         return out
 
     def trace_layers(self, spark, tracer, passes, stage) -> tuple[dict, dict]:
-        layers, _ = prefix_layers(spark, self.prefixes(), tracer)
+        layers, _, unresolved = prefix_layers(spark, self.prefixes(), tracer)
         return layers, {"halo.shuffle_write_bytes": stage["shuffle_write_bytes"] / len(passes),
-                        "halo.strategy": self.strategies["halo"]}
+                        "halo.strategy": self.strategies["halo"],
+                        "unresolved_layers": unresolved}
 
 
 # ---------------------------------------------------------------------------
@@ -560,13 +600,14 @@ class TileIngest(Workload):
         """Prefix times for generation and extract+assign; the manifest
         layers from the traced passes' spans (write = run_stage minus
         the extract+assign prefix it contains)."""
-        layers, took = prefix_layers(spark, self.prefixes(), tracer)
+        layers, took, unresolved = prefix_layers(spark, self.prefixes(), tracer)
         spans = lambda name: [s["end"] - s["start"] for s in tracer.spans  # noqa: E731
                               if s["name"] == name]
         layers["manifest.write"] = median(spans("manifest.write")) - took["tiling.assign"]
         layers["manifest.lineage"] = median(spans("manifest.lineage"))
         layers["manifest.resume"] = median(spans("manifest.resume"))
-        return layers, {"manifest.files_written": median(p["files_written"] for p in passes)}
+        return layers, {"manifest.files_written": median(p["files_written"] for p in passes),
+                        "unresolved_layers": unresolved}
 
 
 WORKLOADS = {w.name: w for w in (GeoJoin, ZoneJoin, RasterHalo, TileIngest)}
