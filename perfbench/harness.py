@@ -20,13 +20,14 @@ from perfbench import probes
 from perfbench.trace import Tracer, span_cost_s
 from perfbench.workloads import WORKLOADS, PassResult
 
-WARMUP_PASSES = 2  # the first pass after a cold JVM start runs 2-3x slower,
-                   # the second still ~10% slower on raster_halo
+# the first pass after a cold JVM start runs 2-3x slower; raster_halo's
+# short passes keep getting faster for a few more
+WARMUP_PASSES = {"raster_halo": 3}
 TAIL_BEYOND = 10
 
 # default input sizes: docs per pass, or raster side in cells
 SIZES = {"geo_join": 100_000, "zone_join": 100_000,
-         "raster_halo": 1536, "tile_ingest": 25_000}
+         "raster_halo": 3072, "tile_ingest": 25_000}
 
 # which issue-named layers make up each role metric, per workload
 ROLES = {
@@ -155,9 +156,9 @@ _off = Tracer(False)
 
 
 def setup(sess: Session, wl, tracer: Tracer) -> tuple[dict, str]:
-    """Cold start, input load, plan building, then WARMUP_PASSES
-    warm-up passes that fix the reference digest; the last is checked
-    against the oracle.
+    """Cold start, input load, plan building, then the workload's
+    WARMUP_PASSES (default 2) warm-up passes that fix the reference
+    digest; the last is checked against the oracle.
 
     setup_s = cold start + plan build + warm-up passes: what a user pays
     from launching the session to a first finished job on a warm JVM.
@@ -172,7 +173,7 @@ def setup(sess: Session, wl, tracer: Tracer) -> tuple[dict, str]:
         wl.bind(sess.spark, tracer)
     plan = time.perf_counter() - t0
     warm, digests = [], []
-    for _ in range(WARMUP_PASSES):
+    for _ in range(WARMUP_PASSES.get(wl.name, 2)):
         t0 = time.perf_counter()
         res = wl.run_pass(sess.spark, _off)
         warm.append(time.perf_counter() - t0)

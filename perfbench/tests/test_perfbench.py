@@ -100,6 +100,18 @@ def test_corrupted_raster_tile_is_flagged():
     assert len(wl.check_pass(None, PassResult("d", sample))) == 2
 
 
+def test_oracle_window_matches_whole_raster():
+    a = inputs.fractal_terrain(3, 2048)
+    tiles = workloads.SAMPLE_TILES
+    reach = workloads.oracle_reach(tiles, 2048)
+    assert reach < 2048
+    whole, cut = oracle.raster_reference(a), oracle.raster_reference(a[:reach, :reach])
+    for op in whole:
+        for ty, tx in tiles:
+            win = np.s_[ty * 512:(ty + 1) * 512, tx * 512:(tx + 1) * 512]
+            np.testing.assert_array_equal(cut[op][win], whole[op][win])
+
+
 def test_failed_lineage_or_resume_is_flagged():
     wl = workloads.TileIngest(0, 10, Path("."))
     ok = {"lineage_ok": True, "resumed": True}

@@ -386,6 +386,13 @@ RASTER_TOL = {  # (rtol, atol) for float32 kernels vs the float32 oracle
 }
 
 
+def oracle_reach(sample_tiles, side: int) -> int:
+    """Side of the top-left square the raster oracle needs: the sample
+    tiles plus the fused chain's 3-cell reach.  Cells beyond it cannot
+    change a sample tile."""
+    return min(side, (1 + max(max(t) for t in sample_tiles)) * inputs.TILE + 3)
+
+
 class RasterHalo(Workload):
     """Binary tile transfer, halo exchange and numpy kernels."""
 
@@ -414,32 +421,40 @@ class RasterHalo(Workload):
             ("tiled.fused_chain", "chain",
              lambda t: tiled.apply_stencil_tiled(t, chain_fn, chain_r)),
         ]
-        raster = self._collect_input(spark)
-        ref = oracle.raster_reference(raster)
         T = inputs.TILE
+        ref = oracle.raster_reference(
+            self._collect_input(spark, oracle_reach(self.sample_tiles, side)))
         self.expected = {
             op: {(ty, tx): arr[ty * T:(ty + 1) * T, tx * T:(tx + 1) * T]
                  for ty, tx in self.sample_tiles}
             for op, arr in ref.items()
         }
 
-    def _collect_input(self, spark) -> np.ndarray:
-        side, T = self.meta["side"], inputs.TILE
-        out = np.full((side, side), np.nan, np.float32)
-        for r in self.read(spark).select("ty", "tx", "h", "w", "value").collect():
+    def _collect_input(self, spark, reach: int) -> np.ndarray:
+        """The stored raster's top-left ``reach`` x ``reach`` cells."""
+        from pyspark.sql import functions as F
+
+        T = inputs.TILE
+        n = -(-reach // T)
+        out = np.full((n * T, n * T), np.nan, np.float32)
+        rows = (self.read(spark).where((F.col("ty") < n) & (F.col("tx") < n))
+                .select("ty", "tx", "h", "w", "value").collect())
+        for r in rows:
             a = np.frombuffer(r["value"], np.float32).reshape(r["h"], r["w"])
             out[r["ty"] * T:r["ty"] * T + r["h"], r["tx"] * T:r["tx"] * T + r["w"]] = a
-        return out
+        return out[:reach, :reach]
 
     def read(self, spark):
         from xarray_spatial_spark import tiled
 
         return tiled.read(spark, str(self.path), tile_bytes=self.tile_bytes)
 
-    def run_pass(self, spark, tracer) -> PassResult:
-        """All four operators in one Spark job: a union of their
-        outputs, each reduced to per-tile hashes plus the sample tiles'
-        bytes, is collected at once."""
+    def bind(self, spark, tracer) -> None:
+        """Build the four operators' plan once per session: a union of
+        their outputs, each reduced to per-tile hashes plus the sample
+        tiles' bytes.  Building it is driver-side work of about a second
+        per operator, paid in set-up; a pass then times tile transfer,
+        halo exchange and the kernels."""
         from functools import reduce
 
         from pyspark.sql import functions as F
@@ -455,8 +470,14 @@ class RasterHalo(Workload):
                     F.lit(key).alias("op"), "ty", "tx", "h", "w",
                     F.xxhash64("value").alias("hash"),
                     F.when(sampled, F.col("value")).alias("blob")))
+        self.union = reduce(lambda a, b: a.unionByName(b), outs)
+
+    def run_pass(self, spark, tracer) -> PassResult:
+        """All four operators in one Spark job.  Each pass plans a fresh
+        query over the bound plan, so its halo shuffles run again rather
+        than reuse an earlier pass's output."""
         with tracer.span("action"):
-            rows = reduce(lambda a, b: a.unionByName(b), outs).collect()
+            rows = self.union.select("*").collect()
         hashes = [(r["op"], r["ty"], r["tx"], r["hash"]) for r in rows]
         samples = {key: {} for _, key, _ in self.ops}
         for r in rows:
