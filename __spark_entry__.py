@@ -391,7 +391,7 @@ def q_local_cellstats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_proximity_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # compiled LEAST-chain path (proximity.nearest_expr); the Arrow
+    # compiled JVM-kernel path (proximity.nearest_expr); the Arrow
     # broadcast path is exercised by the pytest goldens and must agree
     # (tests/test_proximity.py::test_nearest_expr_matches_broadcast)
     d = _docs(spark, sf_dir).select("doc_id", "lon", "lat")

@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
-from xarray_spatial_spark import get_spark
+from xarray_spatial_spark import get_spark, jvm
 from xarray_spatial_spark.operators import zonal
 from xarray_spatial_spark.operators.pip import pip_join, pip_join_expr
 from xarray_spatial_spark.operators.tiling import assign_cells
@@ -286,10 +286,10 @@ def tiled_stencil_bench(spark) -> dict[str, float]:
     # what deleting Python/Arrow entirely is worth (build is
     # idempotent; silently absent without a JDK)
     import subprocess
-    if tiled.jvm_kernels_jar() is None:
+    if jvm.kernels_jar() is None:
         subprocess.run(["sh", "scripts/build_jvm_kernels.sh"],
                        capture_output=True, cwd=os.path.dirname(__file__) or ".")
-    if tiled.jvm_kernels_jar() is not None:
+    if jvm.kernels_jar() is not None:
         spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
         tiled.slope_tiled_jvm(tdf).write.mode("overwrite").format("noop").save()
         best = float("inf")

@@ -112,7 +112,8 @@ def test_pip_join(spark):
 
 
 def test_pip_expr_matches_arrow_path(spark):
-    """Compiled Catalyst PIP must agree with the Arrow ray-cast path."""
+    """The compiled PIP kernel (pip_join_expr) must agree with the
+    Arrow ray-cast path, boundary points included."""
     import pandas as pd
 
     rng = np.random.default_rng(12)
@@ -123,15 +124,37 @@ def test_pip_expr_matches_arrow_path(spark):
             "lat": rng.uniform(-10, 40, 2000),
         }
     )
+    # boundary cases: every vertex, points on horizontal and vertical
+    # edges (and just off them), and points inside the overlap of
+    # zone 3 and zone 4 (both contain (5, 5); the lower id must win)
+    overlap = np.array([[2.0, 2.0], [8.0, 2.0], [8.0, 8.0], [2.0, 8.0]])
+    spike = np.array([[4.0, 4.0], [12.0, 5.0], [4.0, 6.0]])
+    verts = np.concatenate([SQUARE, TRIANGLE, overlap, spike])
+    eps = 1e-9
+    edge = [(x, 0.0) for x in (0.0, 3.0, 10.0)] + [(x, 10.0) for x in (5.0, 10.0)]
+    edge += [(0.0, y) for y in (0.0, 5.0, 10.0)] + [(10.0, y) for y in (3.0, 7.0)]
+    edge += [(22.0, 20.0), (28.0, 20.0), (8.0, 5.0), (2.0, 2.0 + eps)]
+    edge += [(x + d, y) for x, y in [(0.0, 5.0), (10.0, 5.0)] for d in (-eps, eps)]
+    edge += [(x, y + d) for x, y in [(5.0, 0.0), (5.0, 10.0)] for d in (-eps, eps)]
+    edge += [(5.0, 5.0), (4.5, 5.0), (9.0, 5.0), (11.0, 5.0), (12.0, 5.0)]
+    extra = np.concatenate([verts, np.array(edge)])
+    pts = pd.concat([pts, pd.DataFrame({
+        "pid": range(2000, 2000 + len(extra)),
+        "lon": extra[:, 0], "lat": extra[:, 1]})], ignore_index=True)
     df = spark.createDataFrame(pts)
-    polys = {1: SQUARE, 2: TRIANGLE}
-    a = {r["pid"]: r["zone"] for r in pip.pip_join(df, polys).collect()}
-    b = {r["pid"]: r["zone"] for r in pip.pip_join_expr(df, polys).collect()}
-    for k in a:
-        av, bv = a[k], b[k]
-        assert (av is None and bv is None) or av == bv, (k, av, bv)
-    # some of each
-    assert any(v == 1.0 for v in b.values()) and any(v is None for v in b.values())
+    centre = int(pts.loc[(pts["lon"] == 5.0) & (pts["lat"] == 5.0), "pid"].iloc[0])
+    # (5, 5) lies in SQUARE, overlap and spike: the lowest zone id wins
+    for polys, first in (({1: SQUARE, 2: TRIANGLE}, 1.0),
+                         ({1: SQUARE, 2: TRIANGLE, 3: overlap, 4: spike}, 1.0),
+                         ({3: spike, 4: overlap}, 3.0),
+                         ({3: overlap, 4: spike}, 3.0)):
+        a = {r["pid"]: r["zone"] for r in pip.pip_join(df, polys).collect()}
+        b = {r["pid"]: r["zone"] for r in pip.pip_join_expr(df, polys).collect()}
+        for k in a:
+            av, bv = a[k], b[k]
+            assert (av is None and bv is None) or av == bv, (list(polys), k, av, bv)
+        assert b[centre] == first
+        assert any(v is None for v in b.values())
 
 
 def test_pip_matches_bruteforce_on_random_points(spark):

@@ -5,9 +5,16 @@ depends on: column pruning reaching the parquet scan, compiled
 operators staying out of Python, single-exchange aggregates, and
 broadcast joins where a broadcast is intended."""
 
+import re
+import sys
+import zipfile
+from pathlib import Path
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _plan(df) -> str:
@@ -30,11 +37,9 @@ def test_scan_prunes_to_needed_columns(spark, tmp_path):
     assert "n_chars" in plan
 
 
-def test_compiled_pipeline_has_no_python_stage(spark):
-    """The headline pipeline (JVM cells + compiled PIP + compiled
-    allocation) must contain zero Python/Arrow eval nodes."""
-    import sys
-    sys.path.insert(0, "/root/repo")
+def _headline_pipeline(spark):
+    """assign_cells -> pip_join_expr -> nearest_expr over 100 docs."""
+    sys.path.insert(0, str(REPO))
     from bench import _cities40, _world_polygons
     from xarray_spatial_spark.operators.pip import pip_join_expr
     from xarray_spatial_spark.operators.proximity import nearest_expr
@@ -42,11 +47,16 @@ def test_compiled_pipeline_has_no_python_stage(spark):
     from xarray_spatial_spark.sources.documents import documents
 
     docs = documents(spark, 100).select("doc_id", "lon", "lat")
-    out = nearest_expr(
+    return nearest_expr(
         pip_join_expr(assign_cells(docs, 12, 5), _world_polygons()),
         _cities40(), metric="GREAT_CIRCLE",
     )
-    agg = out.groupBy("tile_id").count()
+
+
+def test_compiled_pipeline_has_no_python_stage(spark):
+    """The headline pipeline (JVM cells + compiled PIP + compiled
+    allocation) must contain zero Python/Arrow eval nodes."""
+    agg = _headline_pipeline(spark).groupBy("tile_id").count()
     agg.collect()  # finalize the adaptive plan so codegen spans appear
     plan = _plan(agg)
     for marker in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas",
@@ -54,6 +64,33 @@ def test_compiled_pipeline_has_no_python_stage(spark):
                    "BatchEvalPython"):
         assert marker not in plan, marker
     assert "*(" in plan  # the codegen-span marker in plan toString
+
+
+def test_compiled_pipeline_methods_fit_the_jit(spark):
+    """Every whole-stage subtree of the headline pipeline stays within
+    HotSpot's 8,000-byte HugeMethodLimit: a larger generated method is
+    never JIT-compiled and runs in the bytecode interpreter (inlining
+    the polygon and target sets as Column expressions made 39 KB)."""
+    agg = _headline_pipeline(spark).groupBy("tile_id").agg(
+        F.sum("zone"), F.sum("nearest_dist"), F.sum("nearest_payload"),
+        F.sum("nearest_x"), F.sum("nearest_y"))
+    agg.collect()
+    text = spark._jvm.PythonSQLUtils.explainString(
+        agg._jdf.queryExecution(), "codegen")
+    sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(\d+)", text)]
+    assert sizes, text[:2000]
+    assert max(sizes) <= 8000, sizes
+
+
+def test_kernel_jar_holds_every_kernel_source():
+    """jvm/xss_kernels.jar must hold a class for each jvm/xss/*.java:
+    a kernel source added or renamed without rerunning
+    scripts/build_jvm_kernels.sh fails here."""
+    sources = sorted(p.stem for p in (REPO / "jvm" / "xss").glob("*.java"))
+    with zipfile.ZipFile(REPO / "jvm" / "xss_kernels.jar") as z:
+        classes = {n[len("xss/"):-len(".class")] for n in z.namelist()
+                   if n.startswith("xss/") and n.endswith(".class")}
+    assert sources and set(sources) <= classes, (sources, sorted(classes))
 
 
 def test_zonal_stats_single_exchange_per_agg(spark):

@@ -205,17 +205,13 @@ def test_knn_ring_join_matches_broadcast(spark):
     np.testing.assert_allclose(near["got"], near["want"], rtol=1e-9)
 
 
-def test_nearest_expr_matches_broadcast(spark):
-    """Compiled LEAST-chain nearest must equal the Arrow broadcast path."""
-    import pandas as pd
-    from xarray_spatial_spark.sources.documents import documents
-
-    docs = documents(spark, 300).select("doc_id", "lon", "lat")
-    targets = [(-74.006, 40.7128, 1.0), (-0.1278, 51.5074, 2.0),
-               (139.6503, 35.6762, 3.0), (77.209, 28.6139, 4.0)]
+def _nearest_both(spark, docs, targets, metric):
+    """(nearest_expr, nearest_broadcast) outputs indexed by doc_id, with
+    the broadcast payload column renamed to nearest_payload."""
+    cols = ["nearest_dist", "nearest_payload", "nearest_x", "nearest_y"]
     got = (
-        prox.nearest_expr(docs, targets, metric="GREAT_CIRCLE")
-        .select("doc_id", "nearest_dist", "nearest_payload")
+        prox.nearest_expr(docs, targets, metric=metric)
+        .select("doc_id", *cols)
         .toPandas().set_index("doc_id").sort_index()
     )
     tdf = spark.createDataFrame(
@@ -223,10 +219,71 @@ def test_nearest_expr_matches_broadcast(spark):
         schema="lon double, lat double, city double",
     )
     want = (
-        prox.nearest_broadcast(docs, tdf, target_payload="city",
-                               metric="GREAT_CIRCLE")
-        .select("doc_id", "nearest_dist", "nearest_city")
+        prox.nearest_broadcast(docs, tdf, target_payload="city", metric=metric)
+        .withColumnRenamed("nearest_city", "nearest_payload")
+        .select("doc_id", *cols)
         .toPandas().set_index("doc_id").sort_index()
     )
-    np.testing.assert_allclose(got["nearest_dist"], want["nearest_dist"], rtol=1e-9)
-    np.testing.assert_array_equal(got["nearest_payload"], want["nearest_city"])
+    return got, want
+
+
+def test_nearest_expr_matches_broadcast(spark):
+    """The compiled nearest kernel (nearest_expr) must equal the Arrow
+    broadcast path: all three metrics at the 64-target cap, points near
+    the poles and the antimeridian, and an exact two-target tie (the
+    smaller payload wins in both)."""
+    from xarray_spatial_spark.sources.documents import documents
+
+    rng = np.random.default_rng(21)
+    cities = [(-74.006, 40.7128, 1.0), (-0.1278, 51.5074, 2.0),
+              (139.6503, 35.6762, 3.0), (77.209, 28.6139, 4.0),
+              (179.9, 10.0, 5.0), (-179.9, -10.0, 6.0),
+              (30.0, 89.5, 7.0), (-150.0, -89.5, 8.0)]
+    rand = zip(rng.uniform(-180, 180, 56), rng.uniform(-85, 85, 56),
+               rng.permutation(56) + 100.0)
+    targets = cities + [tuple(map(float, t)) for t in rand]
+    assert len(targets) == 64
+    edge = [(lon, lat) for lat in (89.99, 89.9, -89.95, -89.999)
+            for lon in (-180.0, -90.0, 0.0, 45.0, 135.0, 179.99)]
+    edge += [(lon, lat) for lon in (180.0, -180.0, 179.999, -179.999)
+             for lat in (-60.0, -9.0, 0.0, 9.0, 60.0)]
+    docs = documents(spark, 300).select("doc_id", "lon", "lat").unionByName(
+        spark.createDataFrame(
+            [(10_000 + i, lon, lat) for i, (lon, lat) in enumerate(edge)],
+            "doc_id long, lon double, lat double",
+        )
+    )
+    # exact ties: (0, y) is equidistant from (+-10, 0) under every metric
+    tie_targets = [(10.0, 0.0, 7.0), (-10.0, 0.0, 3.0)]
+    tie_docs = spark.createDataFrame(
+        [(i, 0.0, y) for i, y in enumerate((0.0, 5.0, -30.0))],
+        "doc_id long, lon double, lat double",
+    )
+    for metric in ("GREAT_CIRCLE", "EUCLIDEAN", "MANHATTAN"):
+        got, want = _nearest_both(spark, docs, targets, metric)
+        assert len(got) == len(want) == 300 + len(edge)
+        np.testing.assert_allclose(got["nearest_dist"], want["nearest_dist"],
+                                   rtol=1e-9, err_msg=metric)
+        for c in ("nearest_payload", "nearest_x", "nearest_y"):
+            np.testing.assert_array_equal(got[c], want[c], err_msg=metric)
+        got, want = _nearest_both(spark, tie_docs, tie_targets, metric)
+        assert (got["nearest_payload"] == 3.0).all(), metric
+        assert (want["nearest_payload"] == 3.0).all(), metric
+        np.testing.assert_allclose(got["nearest_dist"], want["nearest_dist"],
+                                   rtol=1e-9, err_msg=metric)
+
+
+def test_nearest_null_coordinates_get_no_target(spark):
+    """A NULL or NaN lon/lat yields NULL in all four nearest_* columns,
+    in both nearest_expr and nearest_broadcast."""
+    nan = float("nan")
+    docs = spark.createDataFrame(
+        [(0, None, 1.0), (1, 1.0, None), (2, nan, 0.0), (3, 0.0, nan),
+         (4, None, None), (5, 1.0, 1.0)],
+        "doc_id long, lon double, lat double",
+    )
+    targets = [(0.0, 0.0, 1.0), (2.0, 2.0, 2.0)]
+    for metric in ("GREAT_CIRCLE", "EUCLIDEAN", "MANHATTAN"):
+        for out in _nearest_both(spark, docs, targets, metric):
+            assert out.loc[:4].isna().all().all(), (metric, out)
+            assert out.loc[5].notna().all(), (metric, out)

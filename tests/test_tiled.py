@@ -4,7 +4,7 @@ long-form path, tiled terrain parity, global stats."""
 import numpy as np
 import pytest
 
-from xarray_spatial_spark import raster, tiled
+from xarray_spatial_spark import jvm, raster, tiled
 from xarray_spatial_spark.operators import focal, surface
 from xarray_spatial_spark.operators.convolution import circle_kernel
 
@@ -392,12 +392,12 @@ def test_slope_tiled_jvm_matches_python(spark, arr):
     domain edges.  Builds the jar on first run; skips if no JDK."""
     import subprocess
 
-    if tiled.jvm_kernels_jar() is None:
+    if jvm.kernels_jar() is None:
         import os
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         r = subprocess.run(["sh", "scripts/build_jvm_kernels.sh"],
                            capture_output=True, cwd=repo)
-        if r.returncode != 0 or tiled.jvm_kernels_jar() is None:
+        if r.returncode != 0 or jvm.kernels_jar() is None:
             pytest.skip("JDK/javac unavailable; JVM kernel not built")
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=32, tile_w=32, dtype=np.float32)

@@ -11,6 +11,14 @@ polygon set; assignment is a **broadcast spatial join**:
    bbox-filter the candidates, then run a vectorized ray-casting test
    (even-odd rule) against only those polygons.  Zero shuffles.
 
+Small sets (``pip_join_expr``, <= 64 polygons) skip Python altogether:
+the set is packed into the ``PointInPolygons`` JVM kernel
+(``jvm/xss/PointInPolygons.java``) and runs as one Java UDF call per
+point.  Inlining the set as a CASE chain of Column expressions instead
+generates a method far above HotSpot's 8,000-byte ``HugeMethodLimit``
+(39 KB for 12 polygons of 8 edges), which the JIT never compiles, so
+the whole stage ran in the bytecode interpreter.
+
 Edge semantics: boundary points follow the standard ray-casting
 half-open convention; first matching polygon in ascending zone order
 wins on overlap (deterministic).
@@ -24,6 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from xarray_spatial_spark import grid
 
@@ -92,27 +101,26 @@ def _ray_cast(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray:
     return inside
 
 
-def pip_expr(lon, lat, verts: np.ndarray):
-    """Compile ONE polygon's even-odd ray-cast into a Column predicate:
-    crossing parity over the edges.  Identical geometry to `_ray_cast`
-    — same half-open conventions — but fully JVM/codegen."""
-    from pyspark.sql import functions as F
+def _pip_kernel(spark, polygons: dict[int, np.ndarray]) -> str:
+    """Pack ``polygons`` for the JVM ``PointInPolygons`` kernel
+    (ascending zone id; per polygon its bbox and its non-horizontal
+    edges as (xi, yi, yj, xj - xi, yj - yi), the operands of
+    ``_ray_cast``) and register it; returns the UDF name."""
+    from xarray_spatial_spark.jvm import register_kernel
 
-    x1 = verts[:, 0]
-    y1 = verts[:, 1]
-    x2 = np.roll(x1, -1)
-    y2 = np.roll(y1, -1)
-    crossings = None
-    for i in range(len(verts)):
-        xi, yi, xj, yj = float(x1[i]), float(y1[i]), float(x2[i]), float(y2[i])
-        if yj == yi:
-            continue  # horizontal edge never satisfies (yi>lat) != (yj>lat)
-        cond = ((F.lit(yi) > lat) != (F.lit(yj) > lat)) & (
-            lon < (F.lit(xj - xi) * (lat - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi))
-        )
-        c = cond.cast("int")
-        crossings = c if crossings is None else crossings + c
-    return (crossings % 2) == 1
+    zones = sorted(polygons)
+    bbox, start, edges = [], [0], [np.empty((0, 5))]
+    for z in zones:
+        v = np.asarray(polygons[z], dtype=np.float64)
+        x1, y1 = v[:, 0], v[:, 1]
+        x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+        keep = y2 != y1  # a horizontal edge never satisfies (yi>lat) != (yj>lat)
+        edges.append(np.c_[x1, y1, y2, x2 - x1, y2 - y1][keep])
+        start.append(start[-1] + int(keep.sum()))
+        bbox.append((x1.min(), y1.min(), x1.max(), y1.max()))
+    packed = tuple(np.asarray(a, "<f8").tobytes()
+                   for a in (zones, bbox, start, np.concatenate(edges)))
+    return register_kernel(spark, "PointInPolygons", packed, DoubleType())
 
 
 def pip_join_expr(
@@ -123,32 +131,22 @@ def pip_join_expr(
     zone_col: str = "zone",
     max_polygons: int = 64,
 ) -> DataFrame:
-    """Point-in-polygon as a compiled Column expression — the planner's
-    fast path when the polygon set is small enough to inline into
-    whole-stage codegen (continents/countries-scale sets).
+    """Point-in-polygon as one compiled JVM kernel call — the planner's
+    fast path for small polygon sets (continents/countries scale).
 
-    The broadcast set becomes literals in generated Java: no Python
-    workers, no Arrow transfer, no per-batch allocation — the stage
-    fuses with the scan and the downstream aggregate.  Same first-match
-    (ascending zone id) semantics as ``pip_join``; falls back to the
-    Arrow path above this size."""
-    from pyspark.sql import functions as F
-
+    The set is packed on the driver into the ``PointInPolygons`` Java
+    UDF (``jvm/xss/``): no Python workers, no Arrow transfer, and the
+    stage still fuses with the scan and the downstream aggregate.
+    Same first-match (ascending zone id) semantics and ray-cast
+    arithmetic as ``pip_join``; NULL coordinates get a NULL zone.
+    Falls back to the Arrow path above ``max_polygons``."""
     if len(polygons) > max_polygons:
         return pip_join(points, polygons, lon_col, lat_col, zone_col)
     lon, lat = F.col(lon_col), F.col(lat_col)
-    expr = None
-    for z in sorted(polygons):
-        v = np.asarray(polygons[z], dtype=np.float64)
-        bbox = (
-            (lon >= float(v[:, 0].min())) & (lon <= float(v[:, 0].max()))
-            & (lat >= float(v[:, 1].min())) & (lat <= float(v[:, 1].max()))
-        )
-        hit = bbox & pip_expr(lon, lat, v)
-        expr = F.when(hit, F.lit(float(z))) if expr is None else expr.when(
-            hit, F.lit(float(z))
-        )
-    return points.withColumn(zone_col, expr.otherwise(F.lit(None)))
+    name = _pip_kernel(points.sparkSession, polygons)
+    zone = F.when(lon.isNotNull() & lat.isNotNull(),
+                  F.call_function(name, lon, lat))
+    return points.withColumn(zone_col, zone)
 
 
 def pip_join(

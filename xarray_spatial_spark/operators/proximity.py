@@ -43,6 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from xarray_spatial_spark import grid
 from xarray_spatial_spark.functions.geo import EARTH_RADIUS, distance_col
@@ -93,7 +94,8 @@ def nearest_broadcast(
 ) -> DataFrame:
     """Append nearest-target columns to ``points``: ``nearest_dist``,
     ``nearest_x``, ``nearest_y``[, ``nearest_<payload>``].  No target in
-    range -> NULLs.  Zero-shuffle broadcast NN join.
+    range, or a NULL or NaN coordinate -> NULLs.  Zero-shuffle
+    broadcast NN join.
 
     With a finite ``max_distance`` the broadcast carries a grid-bucket
     index (cell side = the search radius) and each point only scores
@@ -215,7 +217,8 @@ def nearest_broadcast(
                         by[s:e] = ty[idx]
                         if tv is not None:
                             bv[s:e] = tv[idx]
-                beyond = dist > max_distance
+                # NULL (NaN in pandas) or NaN coordinates get no target
+                beyond = (dist > max_distance) | np.isnan(px) | np.isnan(py)
                 dist[beyond] = np.nan
                 bx[beyond] = np.nan
                 by[beyond] = np.nan
@@ -377,30 +380,49 @@ def nearest_expr(
     metric: str = "EUCLIDEAN",
     max_targets: int = 64,
 ) -> DataFrame:
-    """Compiled nearest-target (kNN-1 / allocation fast path): a SMALL
-    broadcast target set inlines into whole-stage codegen as a LEAST
-    chain over (distance, payload) structs — no Python, no shuffle,
+    """Compiled nearest-target (kNN-1 / allocation fast path) for a
+    SMALL target set: one call of the ``NearestTarget`` JVM kernel
+    (``jvm/xss/``) per point picks the winner — no Python, no shuffle,
     fuses with the surrounding stages.  ``targets`` = [(x, y, payload)].
-    Ties break toward the smaller payload (struct ordering), matching
-    ``nearest_broadcast``.  Adds ``nearest_dist`` + ``nearest_payload``."""
+    Adds ``nearest_dist``, ``nearest_payload``, ``nearest_x`` and
+    ``nearest_y``; ``nearest_dist`` is ``distance_col`` evaluated once,
+    on the winner.  Ties break toward the smaller payload, matching
+    ``nearest_broadcast``; a NULL or NaN coordinate gets NULLs.
+
+    Inlining one distance expression per target instead (a LEAST over
+    (distance, payload) structs) generates a method far above
+    HotSpot's 8,000-byte ``HugeMethodLimit`` at tens of targets, which
+    the JIT never compiles, so the stage ran in the interpreter."""
+    from xarray_spatial_spark.jvm import register_kernel
+
     if len(targets) > max_targets:
         raise ValueError(f"{len(targets)} targets: use nearest_broadcast")
+    m = metric.upper()
+    # (payload, x, y) order + the kernel's strict < = smaller payload on ties
+    t = np.array(sorted(targets, key=lambda r: (r[2], r[0], r[1])),
+                 dtype="<f8").reshape(-1, 3)
     px, py = F.col(x_col), F.col(y_col)
-    structs = [
-        F.struct(
-            distance_col(px, F.lit(float(tx)), py, F.lit(float(ty)), metric).alias("d"),
-            F.lit(float(pl)).alias("p"),
-            F.lit(float(tx)).alias("x"),
-            F.lit(float(ty)).alias("y"),
-        )
-        for tx, ty, pl in targets
-    ]
-    best = F.least(*structs)
+    idx = F.col("_nearest_idx")
+
+    def pick(values: np.ndarray):
+        return F.element_at(F.lit(values.tolist()).cast("array<double>"), idx)
+
+    tx, ty = pick(t[:, 0]), pick(t[:, 1])
+    dist = distance_col(px, tx, py, ty, m)  # raises on an unknown metric
+    name = register_kernel(points.sparkSession, "NearestTarget",
+                           (m, t[:, 0].tobytes(), t[:, 1].tobytes()),
+                           IntegerType())
+    valid = px.isNotNull() & py.isNotNull() & ~F.isnan(px) & ~F.isnan(py)
     return (
-        points.withColumn("nearest_dist", best["d"])
-        .withColumn("nearest_payload", best["p"])
-        .withColumn("nearest_x", best["x"])
-        .withColumn("nearest_y", best["y"])
+        points.withColumn("_nearest_idx",
+                          F.when(valid, F.call_function(name, px, py)))
+        .withColumns({
+            "nearest_dist": dist,
+            "nearest_payload": pick(t[:, 2]),
+            "nearest_x": tx,
+            "nearest_y": ty,
+        })
+        .drop("_nearest_idx")
     )
 
 

@@ -10,10 +10,15 @@ direction / kNN) routes through one place:
 ========== =========================== ===================================
 strategy   when                        plan
 ========== =========================== ===================================
-expr       k=1 and <= EXPR_CAP targets LEAST chain over (dist, payload)
-                                       structs — whole-stage codegen, no
-                                       Python, no shuffle, fuses with the
-                                       surrounding stages
+expr       k=1 and <= EXPR_CAP targets one NearestTarget JVM kernel
+                                       call per point (a Java UDF over the
+                                       driver-packed targets) inside
+                                       whole-stage codegen — no Python, no
+                                       shuffle, fuses with the surrounding
+                                       stages; inlining the targets as
+                                       Column expressions would exceed
+                                       HotSpot's 8,000-byte JIT method
+                                       limit and run interpreted
 broadcast  <= BROADCAST_CAP targets    driver-collected packed arrays +
                                        grid-bucket index broadcast; one
                                        mapInPandas pass, zero shuffles;

@@ -8,6 +8,7 @@ cores rather than the 200 default.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -18,19 +19,52 @@ from pyspark.sql import SparkSession
 _PKG_DIR = Path(__file__).resolve().parent
 
 
+def _package_digest(files: list[Path]) -> bytes:
+    h = hashlib.sha256()
+    for p in files:
+        for part in (p.relative_to(_PKG_DIR).as_posix().encode(), p.read_bytes()):
+            h.update(len(part).to_bytes(8, "little"))
+            h.update(part)
+    return h.hexdigest().encode()
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors — the programmatic
     equivalent of ``spark-submit --py-files pkg.zip`` (north rule's
     deployment mode).  Local mode still needs it: Python workers are
-    separate processes that do not inherit the driver's sys.path."""
+    separate processes that do not inherit the driver's sys.path.
+
+    The zip is shared through the temp dir and carries a digest of the
+    package sources as its comment; it is rebuilt whenever the sources
+    differ (another checkout, or edited code)."""
+    files = sorted(_PKG_DIR.rglob("*.py"))
+    digest = _package_digest(files)
     zpath = Path(tempfile.gettempdir()) / "xarray_spatial_spark_pyfiles.zip"
-    if not zpath.exists():
-        tmp = zpath.with_suffix(".tmp.zip")
+    try:
+        with zipfile.ZipFile(zpath) as z:
+            current = z.comment
+    except (OSError, zipfile.BadZipFile):
+        current = None
+    if current != digest:
+        tmp = zpath.with_name(f"{zpath.stem}.{os.getpid()}.tmp.zip")
         with zipfile.ZipFile(tmp, "w") as z:
-            for p in sorted(_PKG_DIR.rglob("*.py")):
+            z.comment = digest
+            for p in files:
                 z.write(p, Path(_PKG_DIR.name) / p.relative_to(_PKG_DIR))
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(str(zpath))
+
+
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else 16g capped at half the host's
+    physical memory (whole GiB, at least 1g): the heap is committed
+    up front (``-Xms`` + ``AlwaysPreTouch``), so a heap the host cannot
+    back fails the JVM at startup."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, total // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -45,6 +79,7 @@ def get_spark(
         # local[N] or local[*]
         n = master[master.index("[") + 1: -1] if "[" in master else "32"
         shuffle_partitions = os.cpu_count() if n == "*" else int(n)
+    heap = _driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
@@ -64,12 +99,12 @@ def get_spark(
         # EVERYTHING every pass — measured +20-45% on small pure-
         # Catalyst queries).  Cached classes are tiny; hold thousands.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        # 16g, NOT bigger: on this VM an oversized heap collapses
-        # 32-thread throughput ~7x (first-touch page faults across a
-        # huge young gen dominate; measured sha2-100M: 48g->24s,
-        # 16g->2.8s at local[32]). Real clusters size executors the
-        # same way: several smaller JVMs beat one giant heap.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # at most 16g: an oversized heap collapses 32-thread
+        # throughput ~7x (first-touch page faults across a huge young
+        # gen dominate; measured sha2-100M: 48g->24s, 16g->2.8s at
+        # local[32]). Real clusters size executors the same way:
+        # several smaller JVMs beat one giant heap.
+        .config("spark.driver.memory", heap)
         # -Xms = -Xmx + AlwaysPreTouch: commit the whole heap at
         # startup.  Lazy heap growth page-faults DURING jobs (measured:
         # 60%+ kernel time bursts and 2-5x run-to-run variance on the
@@ -78,9 +113,8 @@ def get_spark(
         # humongous-allocation path.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+AlwaysPreTouch -XX:+UseG1GC -Xms"
-            + os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-            + " -XX:G1HeapRegionSize=32m",
+            f"-XX:+AlwaysPreTouch -XX:+UseG1GC -Xms{heap}"
+            " -XX:G1HeapRegionSize=32m",
         )
         # NOTE on spark.sql.parquet.columnarReaderBatchSize: the 4096
         # default is right for narrow tables (8-row batches cost a

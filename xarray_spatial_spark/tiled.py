@@ -1257,16 +1257,6 @@ def fuse_stencils(stages: "Sequence[tuple[StencilFn, int]]") -> tuple[StencilFn,
 # experimental JVM kernel path (jvm/xss_kernels.jar)
 # ---------------------------------------------------------------------------
 
-def jvm_kernels_jar() -> str | None:
-    """Path to the compiled kernel jar (scripts/build_jvm_kernels.sh),
-    or None when it hasn't been built."""
-    import os
-
-    p = os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                     "jvm", "xss_kernels.jar")
-    return p if os.path.exists(p) else None
-
-
 def slope_tiled_jvm(tdf: DataFrame, value_col: str = "value") -> DataFrame:
     """Horn slope with a compiled JVM kernel: the same one-shuffle
     strip plan as the shuffle halo strategy, but the halo assembly AND
@@ -1279,20 +1269,15 @@ def slope_tiled_jvm(tdf: DataFrame, value_col: str = "value") -> DataFrame:
     atan comes from the JVM's libm, so results match the Python path
     to ~1 ulp (tests assert allclose, not bit-equality).  Raises if
     the jar isn't built."""
-    jar = jvm_kernels_jar()
-    if jar is None:
-        raise RuntimeError(
-            "JVM kernels not built; run scripts/build_jvm_kernels.sh"
-        )
-    spark = tdf.sparkSession
-    if not spark.conf.get("spark.xrspatial.jvmkernels.loaded", None):
-        from pyspark.sql.types import ArrayType, BinaryType
+    from pyspark.sql.types import ArrayType, BinaryType
 
-        spark.sql(f"ADD JAR '{jar}'")
-        spark.udf.registerJavaFunction(
-            "xss_slope_tile", "xss.SlopeTile", ArrayType(BinaryType())
-        )
-        spark.conf.set("spark.xrspatial.jvmkernels.loaded", "true")
+    from xarray_spatial_spark.jvm import load_kernels
+
+    spark = tdf.sparkSession
+    load_kernels(spark)
+    spark.udf.registerJavaFunction(
+        "xss_slope_tile", "xss.SlopeTile", ArrayType(BinaryType())
+    )
 
     msgs = _jvm_messages(tdf, 1, [value_col])
     grouped = (
